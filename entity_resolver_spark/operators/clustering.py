@@ -193,7 +193,12 @@ def _converged_star_roots(
 def _label_components(ids: DataFrame, roots: DataFrame) -> DataFrame:
     """Label an (id) universe with its component = lexicographically minimal
     member id. ``roots`` is the converged star forest over xxhash64(id)
-    surrogates; ids absent from it are their own root (singletons)."""
+    surrogates; ids absent from it are their own root (singletons).
+
+    Every record id, singletons included, is hashed with ``xxhash64`` into
+    one 64-bit surrogate domain, and components are grouped by surrogate
+    root. A collision between two ids is not detected: their two clusters
+    silently merge under the smaller member id."""
     labeled = (
         ids.select("id", F.xxhash64("id").alias("_nid"))
         .join(

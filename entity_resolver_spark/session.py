@@ -11,7 +11,9 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 # Application ids whose I/O/worker warmup already ran (get_spark is called
@@ -58,8 +60,6 @@ def _warm_session(spark: SparkSession) -> None:
         )
         # Fork the Python worker pool (one worker per core, reused across
         # tasks) with a trivial Arrow-batched UDF over one task per core.
-        import pandas as pd
-
         @F.pandas_udf("double")
         def _warm_udf(x: pd.Series) -> pd.Series:
             return x + 1.0
@@ -68,8 +68,8 @@ def _warm_session(spark: SparkSession) -> None:
         spark.range(0, n, 1, n).select(
             _warm_udf(F.col("id").cast("double"))
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass  # warmup is best-effort; never fail session construction
+    except Exception as exc:  # best-effort: never fail session construction
+        warnings.warn(f"session warm-up failed: {exc!r}", RuntimeWarning, stacklevel=2)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

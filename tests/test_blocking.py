@@ -255,3 +255,47 @@ def test_exact_plain_key_subsumed_by_sorted_token_key(spark, records):
     p_on = candidate_pairs(records, on)
     assert p_off.exceptAll(p_on).count() == 0
     assert p_on.exceptAll(p_off).count() == 0
+
+
+def test_key_subsumption_keeps_pair_set(spark, records):
+    """The ``_st`` stamp lets ``pairs_from_blocks`` skip same-name pairs in
+    every pass but the exact ``t:`` one; the distinct pair set must equal
+    the one computed with the stamp dropped. Named records cover the stamp's
+    three routes: a hot (split) ``t:`` block, whitespace-only names (empty
+    sorted-token key, so no stamp) and a same-name pair blocked by both the
+    plain ``x:`` and the ``t:`` key."""
+    from entity_resolver_spark.functions.hashing import content_hash
+
+    cfg = EngineConfig(max_block_size=8, exact_plain_enabled=True)
+    ids = [r["conv_id"] for r in records.select("conv_id").orderBy("conv_id").collect()]
+
+    def copies(src: str, tag: str, n: int, name: str):
+        return (
+            records.where(F.col("conv_id") == src)
+            .crossJoin(spark.range(n).withColumnRenamed("id", "_i"))
+            .withColumn("conv_id", F.concat(F.lit(tag), F.col("_i").cast("string")))
+            .withColumn("name_key", F.lit(name))
+            .withColumn("name_hash", content_hash(F.col("name_key")))
+            .drop("_i")
+        )
+
+    named = (
+        records.unionByName(copies(ids[0], "hot", 12, "anna maria smith"))
+        .unionByName(copies(ids[1], "blank", 3, "   "))
+        .unionByName(copies(ids[2], "same", 2, "franz schubert"))
+        .unionByName(copies(ids[3], "same_other", 1, "schubert franz"))
+    )
+    blocks = all_blocks(named, cfg).localCheckpoint()
+    split = split_hot_blocks(blocks, cfg).localCheckpoint()
+    stamps = {r["conv_id"]: r["_st"] for r in split.select("conv_id", "_st").distinct().collect()}
+    assert stamps["hot0"] is None, "a hot t: block must not stamp its members"
+    assert stamps["blank0"] is None, "whitespace-only names carry no stamp"
+    assert stamps["same0"] is not None and stamps["same0"] == stamps["same1"]
+    assert stamps["same_other0"] == stamps["same0"], "sorted-token key is word-order free"
+    keys = {r["block_key"][:2] for r in blocks.where(F.col("conv_id") == "same0").collect()}
+    assert {"x:", "t:"} <= keys
+
+    stamped = {tuple(r) for r in pairs_from_blocks(split).collect()}
+    plain = {tuple(r) for r in pairs_from_blocks(split.drop("_st")).collect()}
+    assert stamped == plain
+    assert ("same0", "same1") in stamped and ("blank0", "blank1") in stamped

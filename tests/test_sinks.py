@@ -1,9 +1,14 @@
-"""Output sinks: matches CSV, detailed TSV, clusters JSON."""
+"""Output sinks (matches CSV, detailed TSV, clusters JSON) and Warehouse commits."""
 
 from __future__ import annotations
 
 import json
 import os
+from types import SimpleNamespace
+
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from entity_resolver_spark.sources.sinks import (
     write_clusters_json,
@@ -42,6 +47,91 @@ def test_sinks_roundtrip(spark, tmp_path):
     lines = [json.loads(l) for l in open(os.path.join(jpath, part))]
     by_id = {l["cluster_id"]: l for l in lines}
     assert by_id["a"]["members"] == ["a", "b"] and by_id["a"]["size"] == 2
+
+
+LINEAGE_DTYPES = [
+    ("stage", "string"), ("partition_id", "int"), ("rows", "bigint"),
+    ("committed_at_ns", "bigint"),
+]
+METRICS_DTYPES = [
+    ("stage", "string"), ("payload", "string"), ("rows", "bigint"),
+    ("wall_ms", "double"), ("at_ns", "bigint"),
+]
+
+
+def test_warehouse_commit_stats_match_rescan(spark, tmp_path):
+    """A parquet-mode commit derives rows, partitions and the ``_lineage``
+    rows from the committed files' footers. They must equal a
+    groupBy("_pid") over the committed table for every input layout:
+    several partitions, empty partitions, an empty table, an AQE-coalesced
+    aggregate and a sortWithinPartitions input."""
+    from entity_resolver_spark.sources.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    shapes = {
+        "many": spark.range(10000).repartition(7),
+        "sparse": spark.range(5).repartition(16),
+        "empty": spark.range(0),
+        "coalesced": spark.range(1000).groupBy((F.col("id") % 37).alias("k")).count(),
+        "sorted": spark.range(1000).repartition(5).sortWithinPartitions(F.desc("id")),
+    }
+    for table, df in shapes.items():
+        stats = wh.write(table, df)
+        committed = spark.read.parquet(os.path.join(wh.root, table))
+        want = {r["_pid"]: r["count"] for r in committed.groupBy("_pid").count().collect()}
+        assert stats["rows"] == sum(want.values()), table
+        assert stats["partitions"] == len(want), table
+        lineage = wh.read("_lineage").where(F.col("stage") == table).collect()
+        assert {r["partition_id"]: r["rows"] for r in lineage} == want, table
+        assert len(lineage) == len(want), table
+    assert wh.read("_lineage").dtypes == LINEAGE_DTYPES
+    wh.append_metrics([{"stage": "many", "rows": 10000, "wall_ms": 2.5}])
+    assert wh.read("_metrics").dtypes == METRICS_DTYPES
+
+
+def test_warehouse_driver_appends_upgrade_spark_written_tables(spark, tmp_path):
+    """Telemetry tables holding files written by Spark jobs (earlier
+    warehouses) keep reading back, with their exact schemas, once
+    driver-side appends land beside them."""
+    from entity_resolver_spark.sources.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for table, row, dtypes in [
+        ("_lineage", ("old", 0, 3, 1), LINEAGE_DTYPES),
+        ("_metrics", ("old", "{}", 3, 1.0, 1), METRICS_DTYPES),
+    ]:
+        spark.createDataFrame([row], ", ".join(map(" ".join, dtypes))).write.mode(
+            "append"
+        ).parquet(os.path.join(wh.root, table))
+
+    wh.write("t", spark.range(10).repartition(2))
+    wh.append_metrics([{"stage": "t", "rows": 10, "wall_ms": 1.0}])
+
+    lineage = wh.read("_lineage")
+    assert lineage.dtypes == LINEAGE_DTYPES
+    got = sorted((r["stage"], r["rows"]) for r in lineage.collect())
+    assert got[0] == ("old", 3) and sum(n for s, n in got if s == "t") == 10
+    metrics = wh.read("_metrics")
+    assert metrics.dtypes == METRICS_DTYPES
+    assert sorted(r["stage"] for r in metrics.collect()) == ["old", "t"]
+    payload = json.loads(metrics.where(F.col("stage") == "t").first()["payload"])
+    assert payload == {"stage": "t", "rows": 10, "wall_ms": 1.0}
+
+
+def test_session_warmup_failure_warns(monkeypatch):
+    """The session warm-up is best-effort, but a failure in it is reported,
+    not swallowed."""
+    from entity_resolver_spark.session import _warm_session
+
+    class Broken:
+        sparkContext = SimpleNamespace(applicationId="warmup-failure-test")
+
+        def range(self, *a, **kw):
+            raise RuntimeError("boom")
+
+    monkeypatch.delenv("SPARK_GRAFT_WARM_IO", raising=False)
+    with pytest.warns(RuntimeWarning, match="boom"):
+        _warm_session(Broken())
 
 
 def test_warehouse_catalog_mode_via_jdbc_v2(spark, tmp_path):
@@ -94,6 +184,14 @@ def test_warehouse_catalog_mode_via_jdbc_v2(spark, tmp_path):
         wh.append_metrics([{"stage": "t1", "rows": 2, "wall_ms": 1.5}])
         metric_stages = [r["stage"] for r in wh.read("_metrics").collect()]
         assert metric_stages.count("t1") == 1
+
+        # Only a missing table takes the create fallback: any other append
+        # failure is raised, not papered over by a createOrReplace that
+        # would drop the telemetry history.
+        wh.drop("_metrics")
+        spark.createDataFrame([(1,)], "x int").writeTo("er_jdbc.er._metrics").create()
+        with pytest.raises(AnalysisException):
+            wh.append_metrics([{"stage": "t1", "rows": 2, "wall_ms": 1.5}])
 
         wh.drop("t1")
         assert not wh.exists("t1")
