@@ -507,8 +507,8 @@ def q_er_blocking_recall(spark, sf_dir):
     (primary conversation d{i} and its near-dup variant v{i}) must share a
     blocking key. Spark emits the true pairs that candidate_pairs covers;
     the oracle emits ALL true pairs — they hash-equal iff the full multi-pass
-    blocker (exact, SNM, MinHash-LSH, anchors, rare-shingle, hot-split)
-    achieves 100% recall on this corpus. Exercises the same operator the old
+    blocker (exact, anchors, MinHash-LSH, rare-shingle, hot-split) achieves
+    100% recall on this corpus. Exercises the same operator the old
     rows-only er_candidate_pairs query ran, now with a pass/fail gate."""
     from entity_resolver_spark.operators.blocking import candidate_pairs
     from entity_resolver_spark.operators.transcripts import build_entity_records

@@ -1,31 +1,29 @@
 """Stage 2 — multi-pass blocking: candidate pair generation.
 
 Replaces the reference's two blocking passes —
-* exact person-hash grouping (/root/reference/src/classifying.py:1930-1968)
+* exact person-hash grouping (reference src/classifying.py:1930-1968)
 * Weaviate ANN expansion, cosine distance <= 0.18
-  (/root/reference/src/classifying.py:1663-1833)
-— with Spark-native passes that all emit (conv_id, block_key, skey) rows into
-ONE unified pair-generation join:
+  (reference src/classifying.py:1663-1833)
+— with five Spark-native passes that all emit (conv_id, block_key, skey) rows
+into ONE pair-generation join. The block-key prefix names the pass:
 
-  B1 exact      : block_key = name_hash / sorted-token name hash     (J3)
-  B2 sorted-ngh : GLOBAL rank under a range partitioning, overlapping rank
-                  buckets -> neighbors within SNM_WINDOW/2 share a bucket
-                  (north_rule's "sorted-neighborhood on normalized name/text
-                  keys"); no per-prefix Window, no single-task sort
-  B3 minhash-lsh: banded MinHash over word shingles of norm_text (north_rule's
-                  "MinHash-LSH on token shingles"; replaces the ANN join J4)
-  B4 name-lsh   : banded MinHash over char 3-grams of the name key
-  B5 anchors    : for EVERY name token (len >= 3), three keys pairing the
-                  anchor with the sorted initials of the other tokens:
-                  token | soundex(token) | sorted-chars(token). The
-                  multi-anchor form is order/length symmetric ("Turing,
-                  Rosalind" and "Turing, R." both emit turing|r even though
-                  their LONGEST token differs), soundex catches phonetic
-                  typos, and the sorted-chars (anagram) key catches
-                  adjacent-transposition typos that change soundex ("Mnedel"
-                  -> M340 vs "Mendel" -> M534: soundex collapses same-code
-                  adjacent letters THROUGH the first letter, so swaps across
-                  position 0 break it; the char multiset is swap-invariant).
+  t:  exact       : hash of the sorted-token name key                  (J3)
+  i:  anchors     : for EVERY name token (len >= 3), the token paired with
+                    the sorted initials of the other tokens. Order/length
+                    symmetric: "Turing, Rosalind" and "Turing, R." both emit
+                    turing|r even though their LONGEST token differs.
+  a:  anagram     : the same with the token's sorted characters, which are
+                    invariant under adjacent-transposition typos
+                    ("Mnedel" ~ "Mendel").
+  m   minhash-lsh : banded MinHash over the distinct word shingles of the
+                    text (north_rule's "MinHash-LSH on token shingles";
+                    replaces the ANN join J4)
+  r   rare-shingle: inverted index on text shingles with document
+                    frequency <= rare_shingle_max_df
+
+The t:/i:/a: keys come from one fused per-record expression; the m and r
+passes both derive from one materialized distinct-shingle table, so the
+corpus text is shingled once per run.
 
 Pair generation is a single self-equi-join on block_key with a skew guard:
 hot blocks (> max_block_size members) are split into RANK-ORDERED overlapping
@@ -45,10 +43,10 @@ pipeline STAGE: the Warehouse stage boundary (plans/pipeline.py writes
 cut, and a mid-stage executor loss merely recomputes this stage from the
 previous stage table, never from raw input. The cuts that would need to
 become Warehouse round-trips if blocking were ever split into separately
-resumable sub-stages are: the global-rank stamp (`_pid` rows, SNM), the
-rare-shingle inverted index (scanned for df-cap + probe), and the
-post-split block table feeding the pair self-join. The CC loop is the one
-place where an intra-stage failure loses unbounded work; it has the
+resumable sub-stages are: the distinct-shingle table (scanned by the MinHash
+signature, the df aggregate and the rare probe), the hot-shingle set, and
+the post-split block table feeding the pair self-join. The CC loop is the
+one place where an intra-stage failure loses unbounded work; it has the
 ``reliable_every`` knob instead (operators/clustering.py).
 """
 
@@ -58,11 +56,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_resolver_spark.config import EngineConfig
-from entity_resolver_spark.functions.hashing import (
-    lsh_band_keys,
-    minhash_signature,
-    shingles_expr,
-)
+from entity_resolver_spark.functions.hashing import lsh_band_keys, shingles_expr
 
 
 def _name_tokens() -> F.Column:
@@ -77,37 +71,12 @@ def _sorted_name_key() -> F.Column:
     return F.array_join(F.array_sort(_name_tokens()), " ")
 
 
-def _named(key: F.Column) -> F.Column:
-    """NULL the key out for records without a usable name."""
-    return F.when(F.col("name_key") != "", key)
-
-
-def _exact_key_exprs(include_plain: bool = True) -> list[F.Column]:
-    """B1: exact normalized-name-hash key + sorted-token name key.
-
-    The plain key is STRICTLY SUBSUMED by the sorted-token key before the
-    skew split (name_hash = content_hash(name_key); equal name_key implies
-    equal sorted tokens), so ``include_plain=False`` drops it — the only
-    coverage it can add is inside a HOT sorted-token block whose equal-name
-    run exceeds the split cap, and the rank-ordered split sorts by skey so
-    equal names stay adjacent (cfg.exact_plain_enabled; volume/recall
-    measured by scripts/prune_eval.py)."""
-    sorted_tok = _named(
-        F.concat(F.lit("t:"), F.xxhash64(_sorted_name_key()).cast("string"))
-    )
-    out = [F.array(sorted_tok)]
-    if include_plain:
-        plain = F.when(
-            F.col("name_hash").isNotNull(),
-            F.concat(F.lit("x:"), F.col("name_hash").cast("string")),
-        )
-        out.insert(0, F.array(plain))
-    return out
-
-
-def exact_blocks(records: DataFrame) -> DataFrame:
-    """B1 as standalone (conv_id, block_key) rows — audit/compat surface."""
-    return _explode_keys(records, _exact_key_exprs())
+def _exact_key_exprs() -> list[F.Column]:
+    """t: the sorted-token name hash, NULL for records without a usable name.
+    ``split_hot_blocks`` stamps records whose t: block stays intact, and
+    ``pairs_from_blocks`` lets that block alone emit their same-name pairs."""
+    key = F.concat(F.lit("t:"), F.xxhash64(_sorted_name_key()).cast("string"))
+    return [F.array(F.when(F.col("name_key") != "", key))]
 
 
 def _explode_keys(records: DataFrame, key_arrays: list[F.Column]) -> DataFrame:
@@ -129,17 +98,12 @@ def _sorted_chars(t: F.Column) -> F.Column:
     return F.concat_ws("", F.array_sort(F.filter(F.split(t, ""), lambda c: c != "")))
 
 
-def _anchor_key_arrays(
-    forms: tuple = ("identity", "soundex", "anagram"),
-) -> list[F.Column]:
-    """B5: per-token anchor keys. For each name token t (len >= 3), pair an
-    anchor form of t with the sorted first letters of the OTHER tokens.
-    Symmetric in which token is the surname — 'rosalind turing' emits both
-    (rosalind|t) and (turing|r), so 'turing r' meets it at turing|r no matter
-    which token is longer (the old longest-token-as-surname heuristic broke
-    exactly there). Three anchor forms per token: identity (initialisms),
-    soundex (phonetic typos), sorted chars (transposition typos).
-    ``forms`` selects the enabled families (EngineConfig.anchor_forms)."""
+def _anchor_key_arrays() -> list[F.Column]:
+    """i:/a: per-token anchor keys. For each name token t (len >= 3), pair t
+    (i:) or its sorted characters (a:) with the sorted first letters of the
+    OTHER tokens. Symmetric in which token is the surname — 'rosalind turing'
+    emits both (rosalind|t) and (turing|r), so 'turing r' meets it at
+    turing|r no matter which token is longer."""
     toks = _name_tokens()
     idx = F.sequence(F.lit(1), F.size(toks))
 
@@ -164,144 +128,15 @@ def _anchor_key_arrays(
 
         return F.when(F.size(toks) > 0, F.transform(idx, one))
 
-    builders = {
-        "identity": lambda: fam("i:", lambda t: t),
-        "soundex": lambda: fam("p:", F.soundex),
-        "anagram": lambda: fam("a:", _sorted_chars),
-    }
-    unknown = set(forms) - set(builders)
-    if unknown:
-        raise ValueError(f"unknown anchor forms: {sorted(unknown)}")
-    return [builders[f]() for f in forms]
-
-
-def initials_blocks(records: DataFrame) -> DataFrame:
-    """B5 identity anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("identity",)))
-
-
-def soundex_blocks(records: DataFrame) -> DataFrame:
-    """B5 soundex anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("soundex",)))
-
-
-def anagram_blocks(records: DataFrame) -> DataFrame:
-    """B5 sorted-chars anchors as standalone rows — audit/compat surface."""
-    return _explode_keys(records, _anchor_key_arrays(("anagram",)))
-
-
-def _global_rank(df: DataFrame, sort_cols: list[str]) -> DataFrame:
-    """Append a 0-based GLOBAL row index under ``sort_cols`` order, scalably:
-    range-repartition on the sort key (balanced partitions regardless of key
-    skew — ties spread across partitions because the partitioner sees the
-    full tuple), rank per partition locally, then shift by per-partition
-    offsets (one count per partition, collected to the driver — O(partitions)
-    rows, not data). This replaces a per-prefix Window whose hottest prefix
-    was one task sorting an unbounded slice — the non-scalable shape.
-    """
-    parts = df.repartitionByRange(*sort_cols)
-    stamped = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = {
-        r["_pid"]: r["n"]
-        for r in stamped.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not counts:
-        return stamped.withColumn("_rank", F.lit(0).cast("long"))
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    omap = F.create_map(
-        *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-    )
-    win = Window.partitionBy("_pid").orderBy(*sort_cols)
-    return stamped.withColumn(
-        "_rank",
-        (F.row_number().over(win) - 1 + omap[F.col("_pid")]).cast("long"),
-    )
-
-
-def sorted_neighborhood_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B2: sorted-neighborhood via overlapping GLOBAL rank buckets.
-
-    Records are globally ranked by the sort key (see ``_global_rank``); two
-    bucketings offset by half a window guarantee any two records within
-    ``snm_window/2`` ranks share at least one bucket. Two sort keys: the name
-    as-is (initials sort next to their expansions: "ramanujan j" ~ "ramanujan
-    joseph") and the token-sorted form (word order swaps: "franz schubert" ~
-    "schubert franz").
-    """
-    w = cfg.snm_window
-    base = records.select("conv_id", "name_key").where(F.col("name_key") != "")
-    out = None
-    for tag, key in (("n", F.col("name_key")), ("o", _sorted_name_key())):
-        keyed = base.select(
-            "conv_id", key.alias("_skey"), _sorted_name_key().alias("skey")
-        )
-        ranked = _global_rank(keyed, ["_skey", "conv_id"])
-        for off in (0, w // 2):
-            b = ranked.select(
-                "conv_id",
-                F.concat_ws(
-                    ":", F.lit(f"s{tag}{off}"),
-                    F.floor((F.col("_rank") + off) / w).cast("string"),
-                ).alias("block_key"),
-                "skey",
-            )
-            out = b if out is None else out.unionByName(b)
-    return out
-
-
-def minhash_lsh_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B3: banded-MinHash blocks over word shingles of the normalized text.
-    Signature via explode+groupBy (codegen'd hashes; partial aggregation
-    keeps the shuffle to one reduced row per (mapper, record))."""
-    with_shingles = records.select(
-        "conv_id",
-        shingles_expr(F.col("tokens"), cfg.shingle_k).alias("_sh"),
-        _sorted_name_key().alias("skey"),
-    )
-    sig = minhash_signature(
-        with_shingles, "conv_id", "_sh", cfg.minhash_hashes, carry_cols=["skey"]
-    )
-    keys = lsh_band_keys(F.col("sig"), cfg.minhash_hashes, cfg.minhash_bands)
-    tagged = F.transform(keys, lambda k: F.concat(F.lit("m"), k))
-    return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
-
-
-def name_lsh_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """B4: banded-MinHash blocks over CHARACTER 3-grams of the token-sorted
-    name key. This is the direct analogue of the reference's ANN expansion
-    over *name-string* vectors (src/classifying.py:1663-1833 queries Weaviate
-    with person-name embeddings, not composite text): small name edits —
-    typos, diacritics, added initials — keep most char 3-grams, so the pair
-    survives blocking even when exact/SNM passes miss it."""
-    skey = _sorted_name_key()
-    n = F.length(skey)
-    grams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2), lambda i: F.substring(skey, i, F.lit(3))
-        ),
-    ).otherwise(F.array(skey))
-    with_grams = records.where(F.col("name_key") != "").select(
-        "conv_id", grams.alias("_g"), skey.alias("skey")
-    )
-    sig = minhash_signature(
-        with_grams, "conv_id", "_g", cfg.name_lsh_hashes, carry_cols=["skey"]
-    )
-    keys = lsh_band_keys(F.col("sig"), cfg.name_lsh_hashes, cfg.name_lsh_bands)
-    tagged = F.transform(keys, lambda k: F.concat(F.lit("g"), k))
-    return sig.select("conv_id", F.explode(tagged).alias("block_key"), "skey")
+    return [fam("i:", lambda t: t), fam("a:", _sorted_chars)]
 
 
 def _shingle_hash_rows(records: DataFrame, cfg: EngineConfig) -> DataFrame:
     """(conv_id, _gh, skey): one row per DISTINCT word ``rare_shingle_k``-
     shingle per record, shingle hashed to 64 bits. Materialized once
-    (localCheckpoint) — consumed by the rare-shingle df aggregate + probe
-    AND, when ``minhash_unified_scan`` is on, by the text-MinHash signature,
-    so the corpus text is scanned and shingled exactly once per blocking
-    run."""
+    (localCheckpoint) and consumed by both text passes — the MinHash
+    signature and the rare-shingle df aggregate + probe — so the corpus text
+    is scanned and shingled exactly once per blocking run."""
     return records.select(
         "conv_id",
         F.explode(
@@ -314,14 +149,15 @@ def _shingle_hash_rows(records: DataFrame, cfg: EngineConfig) -> DataFrame:
 def minhash_blocks_from_shingle_rows(
     sh: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
-    """B3 (unified-scan form): banded-MinHash blocks computed from the
-    materialized ``_shingle_hash_rows`` table instead of a second scan +
-    shingle build over the corpus text. Signature hashes re-hash the 64-bit
+    """m: banded-MinHash blocks computed from the materialized
+    ``_shingle_hash_rows`` table. Signature hashes re-hash the 64-bit
     shingle hash per slot (xxhash64 over longs) — statistically the same
     LSH family as hashing the shingle string per slot (recall measured
-    identical at 24k: 0.99971 either way), while the 144k-corpus text is
-    shingled ONCE for both text passes (the string-scan form cost 73s of a
-    ~210s blocking wall at local[16]).
+    identical to a separate string-scan signature at 24k: 0.99971 either
+    way; that extra scan cost 73s of a ~210s blocking wall at the 144k
+    corpus, local[16]). The signature is an explode+groupBy: partial
+    aggregation keeps the shuffle to one reduced row per mapper x record,
+    and the corpus text never shuffles.
 
     MinHash over DISTINCT shingles equals MinHash over the multiset — min()
     ignores multiplicity — so sharing the rare pass's distinct rows is
@@ -345,7 +181,7 @@ def minhash_blocks_from_shingle_rows(
 def rare_shingle_blocks(
     records: DataFrame, cfg: EngineConfig, sh: DataFrame | None = None
 ) -> DataFrame:
-    """B7: inverted index on RARE text shingles — block key = any distinct
+    """r: inverted index on RARE text shingles — block key = any distinct
     word ``rare_shingle_k``-shingle whose document frequency is
     <= ``rare_shingle_max_df``. The shingle here is LONGER than the
     Jaccard-estimation shingles (``shingle_k``): rarity decays as the
@@ -358,9 +194,10 @@ def rare_shingle_blocks(
     family almost uniquely, so this pass catches pairs whose NAMES are
     unusable (the measured residual at 24k entities: typo-mangled hyphenated
     surnames truncated by name extraction — 3039 missed pairs; this pass
-    recovers ~96% of them at ~20% extra candidate volume, where widening SNM
-    or MinHash bands bought nothing or cost 2-3x). The df cap bounds junk:
-    a shingle can emit at most C(df_max, 2) pairs.
+    recovers ~96% of them at ~20% extra candidate volume, where a wider
+    name-order window or more MinHash bands bought nothing or cost 2-3x).
+    The df cap bounds junk: a shingle can emit at most C(df_max, 2) pairs;
+    a cap of 0 or 1 emits no block at all.
 
     Shape for 100 TB: shingles are hashed early (64-bit; a collision only
     adds a spurious block), df comes from a map-side-combining groupBy (tiny
@@ -370,10 +207,6 @@ def rare_shingle_blocks(
     any skewed probe partition. A count-Window over the shingle would instead
     ship every instance of every hot shingle to one task.
     """
-    if cfg.rare_shingle_max_df <= 1:
-        return records.sparkSession.createDataFrame(
-            [], "conv_id string, block_key string, skey string"
-        )
     if sh is None:
         sh = _shingle_hash_rows(records, cfg)  # scanned twice: df agg + probe
     # INVERTED probe (r5): most distinct shingles are rare at any sane df cap
@@ -392,117 +225,65 @@ def rare_shingle_blocks(
     )
     hot_side = F.broadcast(hot) if hot.count() <= HOT_BROADCAST_MAX else hot
     rare_rows = sh.join(hot_side, "_gh", "left_anti")
-    if cfg.rare_shingle_per_record <= 0:
-        # MEMBER-SET dedup (r5, exactly pair-preserving): consecutive
-        # shingles of one shared phrase all key the SAME record set, and
-        # 62% of rare blocks at the 144k corpus had only ONE member (zero
-        # pairs, pure join traffic). Group members per shingle (bounded by
-        # the df cap — never a hot-key collect), drop size-1 sets, and key
-        # each block by the hash of its member list so duplicate sets
-        # collapse to one block. Measured at 144k: 30.3M block rows ->
-        # ~14.7M, raw pair fan-out 20.8M -> 17.9M, with the downstream
-        # pair set IDENTICAL by construction.
-        grouped = (
-            rare_rows.groupBy("_gh")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("conv_id", "skey"))
-                ).alias("_mem")
-            )
-            .where(F.size("_mem") >= 2)
-            .select(
-                F.transform(F.col("_mem"), lambda m: m["conv_id"]).alias("_ids"),
-                "_mem",
-            )
-            # exact-array dedup (a hash-only dedup could drop a real block on
-            # a 64-bit collision); the hash is only the block KEY, where a
-            # collision merely merges two blocks — extra pairs, never lost
-            .dropDuplicates(["_ids"])
-            .select(F.xxhash64("_ids").alias("_gh"), "_mem")
+    # MEMBER-SET dedup (r5, exactly pair-preserving): consecutive shingles of
+    # one shared phrase all key the SAME record set, and 62% of rare blocks
+    # at the 144k corpus had only ONE member (zero pairs, pure join
+    # traffic). Group members per shingle (bounded by the df cap — never a
+    # hot-key collect), drop size-1 sets, and key each block by the hash of
+    # its member list so duplicate sets collapse to one block. Measured at
+    # 144k: 30.3M block rows -> ~14.7M, raw pair fan-out 20.8M -> 17.9M,
+    # with the downstream pair set IDENTICAL by construction.
+    grouped = (
+        rare_rows.groupBy("_gh")
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("conv_id", "skey"))
+            ).alias("_mem")
         )
-        return grouped.select(
-            F.explode("_mem").alias("_m"),
-            F.concat(F.lit("r"), F.col("_gh").cast("string")).alias("block_key"),
-        ).select(
-            F.col("_m.conv_id").alias("conv_id"), "block_key",
-            F.col("_m.skey").alias("skey"),
+        .where(F.size("_mem") >= 2)
+        .select(
+            F.transform(F.col("_mem"), lambda m: m["conv_id"]).alias("_ids"),
+            "_mem",
         )
-    if cfg.rare_shingle_per_record > 0:
-        # Bottom-k cap per record (prefix-filtering / KMV form): keep the K
-        # smallest rare-shingle hashes. The hash order is GLOBAL, so two
-        # near-dup records keep the same shared shingles wherever both sides
-        # still contain them — a true pair collides unless token noise
-        # removed every one of the K jointly-smallest shared shingles.
-        # Bounds per-record key fan-out (and with it the pair-join and
-        # dedup shuffles, the 144k bottleneck) at K instead of the text
-        # length. collect_list here is bounded by the record's distinct
-        # rare-shingle count and partial-aggregates map-side.
-        rare_rows = (
-            rare_rows.groupBy("conv_id")
-            .agg(
-                F.slice(
-                    F.sort_array(F.collect_list("_gh")),
-                    1,
-                    cfg.rare_shingle_per_record,
-                ).alias("_ghs"),
-                F.first("skey").alias("skey"),
-            )
-            .select("conv_id", F.explode("_ghs").alias("_gh"), "skey")
-        )
-    return rare_rows.select(
-        "conv_id",
+        # exact-array dedup (a hash-only dedup could drop a real block on a
+        # 64-bit collision); the hash is only the block KEY, where a
+        # collision merely merges two blocks — extra pairs, never lost
+        .dropDuplicates(["_ids"])
+        .select(F.xxhash64("_ids").alias("_gh"), "_mem")
+    )
+    return grouped.select(
+        F.explode("_mem").alias("_m"),
         F.concat(F.lit("r"), F.col("_gh").cast("string")).alias("block_key"),
-        "skey",
+    ).select(
+        F.col("_m.conv_id").alias("conv_id"), "block_key",
+        F.col("_m.skey").alias("skey"),
     )
 
 
 def all_blocks(records: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Union of all blocking passes: (conv_id, block_key, skey).
+    """Union of the five blocking passes: (conv_id, block_key, skey).
 
     ``skey`` (the sorted-token name key) rides along so ``split_hot_blocks``
     can order hot-block members by name — splits then forgo name-DISTANT
     pairs, not arbitrary ones.
 
-    The cheap per-record passes (exact, anchor battery) fuse into ONE scan of
-    records (one select, one explode). The MinHash-LSH passes go through
-    explode+groupBy signatures (codegen'd; partial aggregation keeps their
-    shuffles to one reduced row per mapper x record — the corpus text never
-    shuffles), and SNM uses range-partitioned global ranks.
+    The name passes (t:, i:, a:) fuse into ONE scan of records (one select,
+    one explode). The text passes (m, r) share ONE materialized
+    distinct-shingle table (``_shingle_hash_rows``): the MinHash signature
+    and the rare-shingle index are both derived from it.
 
-    Which passes run is config (EngineConfig.snm_enabled / name_lsh_enabled /
-    minhash_text_enabled / anchor_forms) — defaults follow the 72k-entity
-    leave-one-out audit (scripts/blocking_audit.py, BENCH/BASELINE.md): a
-    pass must buy marginal recall proportionate to its unique-pair volume,
-    because every junk candidate is Jaro-Winkler + cosine work downstream.
+    The pass set follows the leave-one-out audit (scripts/blocking_audit.py,
+    COVERAGE.md round 4): a pass must buy marginal recall proportionate to
+    its unique-pair volume, because every junk candidate is Jaro-Winkler +
+    cosine work downstream. Sorted-neighborhood, char-gram name LSH and
+    soundex anchors failed that test at 72k entities and were dropped.
     """
-    out = _explode_keys(
-        records,
-        [
-            *_exact_key_exprs(cfg.exact_plain_enabled),
-            *_anchor_key_arrays(cfg.anchor_forms),
-        ],
+    sh = _shingle_hash_rows(records, cfg)
+    return (
+        _explode_keys(records, [*_exact_key_exprs(), *_anchor_key_arrays()])
+        .unionByName(minhash_blocks_from_shingle_rows(sh, cfg))
+        .unionByName(rare_shingle_blocks(records, cfg, sh=sh))
     )
-    if cfg.snm_enabled:
-        out = out.unionByName(sorted_neighborhood_blocks(records, cfg))
-    # Unified text scan: when both text passes run, shingle the corpus ONCE
-    # (the k=rare_shingle_k distinct-shingle hash table) and derive the
-    # MinHash signature AND the rare-shingle index from it; the standalone
-    # string-scan MinHash remains for profiles with the rare pass disabled.
-    unified = (
-        cfg.minhash_unified_scan
-        and cfg.minhash_text_enabled
-        and cfg.rare_shingle_max_df > 1
-    )
-    sh = _shingle_hash_rows(records, cfg) if unified else None
-    if cfg.minhash_text_enabled:
-        out = out.unionByName(
-            minhash_blocks_from_shingle_rows(sh, cfg)
-            if unified
-            else minhash_lsh_blocks(records, cfg)
-        )
-    if cfg.name_lsh_enabled:
-        out = out.unionByName(name_lsh_blocks(records, cfg))
-    return out.unionByName(rare_shingle_blocks(records, cfg, sh=sh))
 
 
 # Blocks larger than max_block_size * this multiplier skip the rank-ordered

@@ -100,11 +100,11 @@ class ResolutionPipeline:
             # split both consume it.
             #
             # Durability note (cluster scale): this localCheckpoint — and the
-            # ones inside the blocking passes (_global_rank's rank stamp,
-            # rare_shingle's doc-shingle table, split_hot_blocks' input) —
-            # store blocks on executors only; an executor loss mid-stage
-            # fails the stage. That is acceptable HERE because the whole
-            # "pairs" stage is wrapped by _run_stage, whose Warehouse
+            # ones inside the blocking passes (the distinct-shingle table
+            # both text passes read, the hot-shingle set, split_hot_blocks'
+            # input) — store blocks on executors only; an executor loss
+            # mid-stage fails the stage. That is acceptable HERE because the
+            # whole "pairs" stage is wrapped by _run_stage, whose Warehouse
             # two-rename commit is itself the durable checkpoint: a retry
             # re-runs this one stage from the committed `records` table, not
             # the whole pipeline. The CC loop is the exception (unbounded
@@ -132,10 +132,10 @@ class ResolutionPipeline:
         # batch factorize dedup collapses repeated name-key pairs, and that
         # needs same-left adjacency in the stored layout — measured 1.39x on
         # the scoring pass vs an unordered table, and 1.9x vs a round-robin
-        # scatter (scripts/layout_ab.py; BENCH/PROTOCOL_LOG.md). Sorting once
-        # at stage-write time means EVERY downstream scoring pass (retrains,
-        # threshold sweeps, incremental re-scores) inherits the layout — the
-        # 100-TB economics of the compact stage table depend on it.
+        # scatter (BENCH/PROTOCOL_LOG.md). Sorting once at stage-write time
+        # means EVERY downstream scoring pass (retrains, threshold sweeps,
+        # incremental re-scores) inherits the layout — the 100-TB economics of
+        # the compact stage table depend on it.
         inputs = self._run_stage(
             "pair_inputs",
             lambda: pair_inputs(pairs, records, cfg, vectors=vectors)

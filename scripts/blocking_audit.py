@@ -3,18 +3,20 @@ marginal recall of every blocking pass — the data that decides which passes
 earn their shuffle cost (VERDICT r3: the recall fixes nearly doubled candidate
 volume at 72k; this audit is how passes get pruned back).
 
-Covers all 8 current passes (exact, SNM, text-MinHash-LSH, name-char-LSH,
-three anchor families, rare-shingle inverted index), the hot-split
+Builds the production block table once (``all_blocks``) and audits each of
+its five passes as the rows whose block key carries the pass prefix: t:
+(exact sorted-token name), i: / a: (token and anagram anchors), m (text
+MinHash-LSH), r (rare-shingle inverted index). Also reports the hot-split
 forgone-TRUE-pair check (truth coverage of raw block keys vs post-split
-pairs), and parameter variants for the highest-volume passes.
+pairs) and rare-shingle df-cap variants.
 
 Usage: python scripts/blocking_audit.py [n_entities] [--loo] [--variants]
                                         [--union-only]
-  (solo table runs unless --union-only; --loo adds the 8 leave-one-out
+  (solo table runs unless --union-only; --loo adds the 5 leave-one-out
    unions; --variants sweeps rare-shingle df caps and a min-support-2 pair
-   filter; --union-only reports just the DEFAULT-profile union volume,
-   recall, and hot-split forgone-TRUE-pair check — the cheap per-commit
-   regression probe)
+   filter; --union-only reports just the union volume, recall, and
+   hot-split forgone-TRUE-pair check — the cheap per-commit regression
+   probe)
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import os
 import sys
 import time
 from dataclasses import replace
+from functools import reduce
+from operator import or_
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -97,19 +101,28 @@ def main() -> None:
     truths = _truths(labeled).localCheckpoint()
     n_truth = truths.count()
 
+    blocks = B.all_blocks(records, cfg).localCheckpoint()
     passes = {
-        "exact": lambda: B.exact_blocks(records),
-        "snm": lambda: B.sorted_neighborhood_blocks(records, cfg),
-        "minhash_text": lambda: B.minhash_lsh_blocks(records, cfg),
-        "name_lsh": lambda: B.name_lsh_blocks(records, cfg),
-        "anchor_id": lambda: B.initials_blocks(records),
-        "anchor_sdx": lambda: B.soundex_blocks(records),
-        "anchor_ana": lambda: B.anagram_blocks(records),
-        "rare_shingle": lambda: B.rare_shingle_blocks(records, cfg),
+        "exact": "t:",
+        "anchor_id": "i:",
+        "anchor_ana": "a:",
+        "minhash_text": "m",
+        "rare_shingle": "r",
     }
 
+    def rows_of(*prefixes):
+        return blocks.where(
+            reduce(or_, [F.col("block_key").startswith(p) for p in prefixes])
+        )
+
+    def without(name):
+        return rows_of(*[p for other, p in passes.items() if other != name])
+
     def pairs_of(blocks_df):
-        return B.pairs_from_blocks(B.split_hot_blocks(blocks_df, cfg)).localCheckpoint()
+        # the _st stamp assumes every t: block is in the input; a pass subset
+        # may lack them, so pairs come from the unstamped split
+        split = B.split_hot_blocks(blocks_df, cfg).drop("_st")
+        return B.pairs_from_blocks(split).localCheckpoint()
 
     def covered(p) -> int:
         return truths.join(p, ["left", "right"], "left_semi").count()
@@ -119,20 +132,19 @@ def main() -> None:
 
     solo = {}
     if "--union-only" not in flags:
-        for name, fn in passes.items():
+        for name, prefix in passes.items():
             t0 = time.monotonic()
-            p = pairs_of(fn())
+            p = pairs_of(rows_of(prefix))
             n = p.count()
             rec = covered(p) / n_truth
             solo[name] = (n, rec, time.monotonic() - t0)
             print(f"solo {name:14s} pairs={n:>10d} recall={rec:.5f} "
                   f"wall={solo[name][2]:.1f}s", flush=True)
 
-    all_blocks = B.all_blocks(records, cfg).localCheckpoint()
-    all_pairs = pairs_of(all_blocks)
+    all_pairs = pairs_of(blocks)
     n_all = all_pairs.count()
     cov_split = covered(all_pairs)
-    cov_raw = truth_key_coverage(all_blocks, truths)
+    cov_raw = truth_key_coverage(blocks, truths)
     print(f"\nunion: {n_all} pairs ({n_all / n_rec:.1f}/record), "
           f"recall {cov_split / n_truth:.5f}", flush=True)
     print(f"hot-split forgone TRUE pairs: raw-key coverage {cov_raw} vs "
@@ -143,13 +155,7 @@ def main() -> None:
               f"{'loo pairs':>10s} {'loo rec':>9s} {'marg rec':>9s} "
               f"{'uniq pairs':>10s}", flush=True)
         for name in passes:
-            rest = None
-            for other, fn in passes.items():
-                if other == name:
-                    continue
-                b = fn()
-                rest = b if rest is None else rest.unionByName(b)
-            loo = pairs_of(rest)
+            loo = pairs_of(without(name))
             n_loo = loo.count()
             rec_loo = covered(loo) / n_truth
             n_solo, rec_solo, _ = solo[name]
@@ -160,13 +166,7 @@ def main() -> None:
 
     if do_variants:
         print("\n-- rare-shingle variants (solo + union-with-rest) --", flush=True)
-        rest = None
-        for other, fn in passes.items():
-            if other == "rare_shingle":
-                continue
-            b = fn()
-            rest = b if rest is None else rest.unionByName(b)
-        rest_pairs = pairs_of(rest)
+        rest_pairs = pairs_of(without("rare_shingle"))
         for df_cap in (6, 4, 3):
             vcfg = replace(cfg, rare_shingle_max_df=df_cap)
             for min_sup in (1, 2):

@@ -106,8 +106,8 @@ def main() -> None:
         key_battery = B._explode_keys(
             records,
             [
-                *B._exact_key_exprs(cfg.exact_plain_enabled),
-                *B._anchor_key_arrays(cfg.anchor_forms),
+                *B._exact_key_exprs(),
+                *B._anchor_key_arrays(),
             ],
         )
         out = key_battery.unionByName(B.minhash_blocks_from_shingle_rows(sh, cfg))

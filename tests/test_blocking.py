@@ -28,11 +28,11 @@ def test_pairs_are_canonical_and_deduped(spark, records):
 
 
 def test_blocking_reduces_comparisons(spark):
-    """Reduction ratio improves with corpus size (SNM volume is linear in
-    window x corpus, LSH blocks are bounded): assert at 200 entities where
-    the fixed SNM window no longer spans a meaningful corpus fraction. The
-    conftest 20-entity corpus is too small for a reduction claim — window 24
-    alone covers half of 55 records."""
+    """Reduction ratio improves with corpus size (block sizes are bounded by
+    the split cap and the rare-shingle df cap, so candidate pairs grow about
+    linearly while all-pairs grows quadratically): assert at 200 entities.
+    The conftest 20-entity corpus (~55 records) is too small for a reduction
+    claim — a handful of shared text bands already spans much of it."""
     from entity_resolver_spark import datagen
     from entity_resolver_spark.operators.transcripts import build_entity_records
 
@@ -244,29 +244,16 @@ def test_unified_scan_minhash_schema_and_bands(spark, records):
     assert out.where(~F.col("block_key").startswith("m")).count() == 0
 
 
-def test_exact_plain_key_subsumed_by_sorted_token_key(spark, records):
-    """The x: key is strictly subsumed by the t: key pre-split: enabling it
-    must not add any pair on a corpus with no hot equal-name runs."""
-    from dataclasses import replace
-
-    base = EngineConfig()
-    on = replace(base, exact_plain_enabled=True)
-    p_off = candidate_pairs(records, base)
-    p_on = candidate_pairs(records, on)
-    assert p_off.exceptAll(p_on).count() == 0
-    assert p_on.exceptAll(p_off).count() == 0
-
-
 def test_key_subsumption_keeps_pair_set(spark, records):
     """The ``_st`` stamp lets ``pairs_from_blocks`` skip same-name pairs in
     every pass but the exact ``t:`` one; the distinct pair set must equal
     the one computed with the stamp dropped. Named records cover the stamp's
     three routes: a hot (split) ``t:`` block, whitespace-only names (empty
-    sorted-token key, so no stamp) and a same-name pair blocked by both the
-    plain ``x:`` and the ``t:`` key."""
+    sorted-token key, so no stamp) and a same-name pair that the ``i:`` and
+    ``a:`` anchors block as well as the ``t:`` key."""
     from entity_resolver_spark.functions.hashing import content_hash
 
-    cfg = EngineConfig(max_block_size=8, exact_plain_enabled=True)
+    cfg = EngineConfig(max_block_size=8)
     ids = [r["conv_id"] for r in records.select("conv_id").orderBy("conv_id").collect()]
 
     def copies(src: str, tag: str, n: int, name: str):
@@ -293,9 +280,32 @@ def test_key_subsumption_keeps_pair_set(spark, records):
     assert stamps["same0"] is not None and stamps["same0"] == stamps["same1"]
     assert stamps["same_other0"] == stamps["same0"], "sorted-token key is word-order free"
     keys = {r["block_key"][:2] for r in blocks.where(F.col("conv_id") == "same0").collect()}
-    assert {"x:", "t:"} <= keys
+    assert {"t:", "i:", "a:"} <= keys
 
     stamped = {tuple(r) for r in pairs_from_blocks(split).collect()}
     plain = {tuple(r) for r in pairs_from_blocks(split.drop("_st")).collect()}
     assert stamped == plain
     assert ("same0", "same1") in stamped and ("blank0", "blank1") in stamped
+
+
+def _pass_prefix(block_key: str) -> str:
+    return block_key[:2] if block_key[1:2] == ":" else block_key[:1]
+
+
+def test_default_key_battery(spark, records):
+    """``all_blocks`` runs exactly five passes — t:, i:, a:, m, r — and every
+    named record with a token of >= 3 characters gets both anchor keys."""
+    rows = all_blocks(records, EngineConfig()).collect()
+    assert {_pass_prefix(r["block_key"]) for r in rows} == {"t:", "i:", "a:", "m", "r"}
+
+    by_rec: dict[str, set[str]] = {}
+    for r in rows:
+        by_rec.setdefault(r["conv_id"], set()).add(_pass_prefix(r["block_key"]))
+    anchored = [
+        r["conv_id"]
+        for r in records.select("conv_id", "name_key").collect()
+        if any(len(t) >= 3 for t in (r["name_key"] or "").split())
+    ]
+    assert anchored, "corpus has no named records"
+    for cid in anchored:
+        assert {"i:", "a:"} <= by_rec.get(cid, set()), cid
